@@ -73,8 +73,8 @@ object ActivityPipeline {
   /** Streams joined to activity meta with the R5 bypass as a per-row
     * flag instead of a filter-split + union: splitting evaluated the
     * joined stream corpus once per branch — at 100 TB that is scanning
-    * the biggest input twice. (private[graft] so the stage profiler
-    * drives the REAL stages instead of drifting copies.) */
+    * the biggest input twice. (private[graft] so the benchmark's traced
+    * run drives the REAL stages instead of drifting copies.) */
   private[graft] def tagStreams(activities: DataFrame, streams: DataFrame): DataFrame =
     streams.join(activities.select(col("activity_id"), col("elapsed_time")),
         Seq("activity_id"))
@@ -119,7 +119,7 @@ object ActivityPipeline {
     * nesting AND the per-window rolling maxima come out of a single
     * groupBy(activity_id) pass — one shuffle, one consumer of the
     * upstream interpolation chain. The rolling columns (A3) were
-    * computed by the O(1)-per-row prefix-sum kernel on the way in; with
+    * computed by the O(1)-per-row ring kernel on the way in; with
     * windows up to 1200 rows the naive collect-the-frame kernel would
     * do 1200x the work per row. */
   private def maxAggsFor(legacy: Boolean, prefix: String): Seq[Column] = for {

@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,14 +21,32 @@ object ActivitySink {
     rows.withColumn("activity_date", to_date(from_unixtime(col("epoch"))))
       .write.mode("append").partitionBy("activity_date").parquet(path)
 
-  /** S3: latest loaded epoch for one user, 0 when absent
-    * (main.py:187-197). The user filter + any date bound prune at scan. */
-  def latestEpoch(spark: SparkSession, path: String, userId: Long): Long = {
-    val df =
-      try spark.read.parquet(path)
-      catch { case _: Exception => return 0L } // empty sink -> watermark 0
-    df.filter(col("user_id") === userId)
-      .agg(coalesce(max(col("epoch")), lit(0L)))
-      .collect()(0).getLong(0)
+  /** The sink's rows, or None while it holds none: the path is absent,
+    * or no data file exists under it yet (a zero-row first append
+    * leaves only `_SUCCESS`). Emptiness is checked explicitly, never
+    * inferred from a failed read: a transient or corrupt read must fail
+    * the caller, not read as "no history" — that would reset every
+    * watermark to 0 and re-append each user's whole history, or turn
+    * off the streaming sink's dedup during a failure replay. */
+  def read(spark: SparkSession, path: String): Option[DataFrame] = {
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the names Spark's file index skips (`_SUCCESS`, `_temporary`, ...)
+    def hidden(name: String) =
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+    // stops at the first data file, so it lists one partition, not all
+    def hasData(p: Path): Boolean = fs.listStatus(p).iterator
+      .filterNot(f => hidden(f.getPath.getName))
+      .exists(f => !f.isDirectory || hasData(f.getPath))
+    if (fs.exists(dir) && hasData(dir)) Some(spark.read.parquet(path)) else None
   }
+
+  /** S3: latest loaded epoch for one user, 0 when the sink holds no rows
+    * (main.py:187-197). The user filter + any date bound prune at scan. */
+  def latestEpoch(spark: SparkSession, path: String, userId: Long): Long =
+    read(spark, path).fold(0L) {
+      _.filter(col("user_id") === userId)
+        .agg(coalesce(max(col("epoch")), lit(0L)))
+        .collect()(0).getLong(0)
+    }
 }

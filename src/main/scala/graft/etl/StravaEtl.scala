@@ -1,7 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.sources.StravaJsonSource
 
@@ -26,24 +27,18 @@ object StravaEtl {
   def addHistoryData(spark: SparkSession, activitiesPath: String,
                      streamsPath: String, sinkPath: String, nowEpoch: Long,
                      legacyCompat: Boolean = false): DataFrame = {
-    // S3: per-user watermark over the existing sink (0 when absent).
+    // S3: per-user watermark over the existing sink (0 while it holds
+    // no rows; a failed read fails the load — see ActivitySink.read).
     // Keyed by username, as the reference is (main.py:190): username is
     // stamped at ingest and survives legacyCompat, where the sink's
     // user_id is nulled (main.py:171) and a user_id watermark would
     // never match — re-ingesting everything on every run.
-    val watermarks =
-      try spark.read.parquet(sinkPath)
-        .groupBy("username").agg(max(col("epoch")).as("__wm"))
-      catch {
-        case _: Exception =>
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("username",
-                org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("__wm",
-                org.apache.spark.sql.types.LongType))))
-      }
+    val watermarks = ActivitySink.read(spark, sinkPath) match {
+      case Some(sink) => sink.groupBy("username").agg(max(col("epoch")).as("__wm"))
+      case None => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row],
+        StructType(Seq(StructField("username", StringType), StructField("__wm", LongType))))
+    }
 
     // S4: incremental scan — only activities past each user's watermark
     val acts = StravaJsonSource.activities(spark, activitiesPath, nowEpoch.toDouble)

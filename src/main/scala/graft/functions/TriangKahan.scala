@@ -27,9 +27,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   *   both:    A' = A − o + v,   B' = B − v + x
   *
   * O(1) per row, O(n) state, zero difference-of-prefix cancellation:
-  * unlike the prefix-sum kernel (whose C/D grow with the PARTITION and
-  * cancel to window-sized results), every quantity here is window-
-  * local. Each accumulation is Neumaier-compensated, so float drift
+  * every quantity here is window-local, never a partition-sized running
+  * sum that cancels down to a window-sized result. Each accumulation is Neumaier-compensated, so float drift
   * over a long partition stays at the ulp of the window magnitude; on
   * integer-valued inputs (|sums| < 2^53, the a5 gate discipline) every
   * update is exact and the kernel is BIT-EQUAL to a fresh weighted

@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
   *
   *  - interior nulls are linearly interpolated between the nearest
   *    non-null neighbours, weighted by the order column;
+  *  - NaN is a null (pandas' missing marker), never a neighbour;
   *  - leading nulls stay null;
   *  - trailing nulls are forward-filled with the last non-null value.
   *
@@ -44,7 +45,7 @@ object Interpolation {
     val after = base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
     val t = col(orderCol).cast("double")
     val interpCols: Seq[Column] = valueCols.map { c =>
-      val v = col(c).cast("double")
+      val v = nanvl(col(c).cast("double"), lit(null).cast("double"))
       val pv = last(v, ignoreNulls = true).over(before)
       val pt = last(when(v.isNotNull, t), ignoreNulls = true).over(before)
       val nv = first(v, ignoreNulls = true).over(after)

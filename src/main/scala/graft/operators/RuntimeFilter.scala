@@ -39,15 +39,7 @@ object RuntimeFilter {
   def bloomPrunedJoin(fact: DataFrame, dim: DataFrame,
                       factKey: String, dimKey: String,
                       numHashes: Int = 5): DataFrame = {
-    val keys = dim.select(col(dimKey).cast("string").as("k")).distinct()
-    val n = keys.count()
-    val target = math.min(math.max(16L * math.max(n, 1L), 1L << 10), 1L << 27)
-    val bits = (java.lang.Long.highestOneBit(target - 1) << 1).toInt
-    val bloomBytes: Array[Byte] = keys
-      .agg(Bloom.build(col("k"), bits, numHashes).as("bf"))
-      .head().getAs[Array[Byte]]("bf")
-    val pruned = fact.filter(
-      Bloom.mightContainCol(lit(bloomBytes), col(factKey).cast("string"), numHashes))
+    val pruned = bloomPrefilter(fact, dim, factKey, dimKey, numHashes)
     pruned.join(dim, pruned(factKey) === dim(dimKey)).drop(dim(dimKey))
   }
 

@@ -41,20 +41,14 @@ object StravaStreamingEtl {
             .join(acts.select("activity_id"), Seq("activity_id"))
           val rows = ActivityPipeline.process(acts, streams, nowEpoch, legacyCompat)
           // Idempotent append: drop ids already present in the sink,
-          // reading only the date partitions this batch can touch.
-          // Sink absence is checked EXPLICITLY — a broad catch here
-          // would also swallow transient read failures and silently
-          // disable dedup during failure replay, exactly when
-          // duplicates are most likely; any other error fails the
-          // batch and lets the stream's retry semantics handle it.
-          val sinkDir = new org.apache.hadoop.fs.Path(sinkPath)
-          val sinkExists = sinkDir
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(sinkDir)
-          val fresh = if (!sinkExists) rows else {
+          // reading only the date partitions this batch can touch. A
+          // failed sink read fails the batch (ActivitySink.read) and
+          // the stream's retry semantics handle it — never a silent
+          // dedup bypass during failure replay, exactly when
+          // duplicates are most likely.
+          val fresh = ActivitySink.read(spark, sinkPath).fold(rows) { seenAll =>
             val b = rows.agg(min(col("epoch")).as("lo"), max(col("epoch")).as("hi"))
               .collect()(0)
-            val seenAll = spark.read.parquet(sinkPath)
             // null epoch bounds (no parseable timestamps in the batch):
             // fall back to the unpruned id scan — correctness over pruning
             val seen = (if (b.isNullAt(0) || b.isNullAt(1)) seenAll

@@ -55,26 +55,6 @@ object Profile {
         .count()
     }
 
-    // rolling kernel comparison: long partitions (150k rows/key) where
-    // the 1200-row window actually fills — the reference's max window.
-    import org.apache.spark.sql.expressions.Window
-    import graft.operators.TriangularRolling
-    val series = spark.range(600000).select(
-      (col("id") % 4).as("k"), col("id").as("t"),
-      (col("id") % 997).cast("double").as("value"))
-    series.count()
-    val w = Window.partitionBy("k").orderBy("t")
-    time("rolling triang w=1200, O(n) kernel") {
-      val v = series.select(TriangularRolling.triangMean(col("value"), w, 1200).as("r"))
-        .agg(sum("r")).collect()(0).getDouble(0)
-      v.toLong % 1000
-    }
-    time("rolling triang w=1200, prefix-sum kernel") {
-      val v = TriangularRolling.triangMeansFast(series, Seq("k"), Seq("t"),
-        Seq("value"), Seq(1200))
-        .agg(sum("tri_value_1200")).collect()(0).getDouble(0)
-      v.toLong % 1000
-    }
     spark.stop()
   }
 }

@@ -197,6 +197,29 @@ class ActivityPipelineSpec extends AnyFunSuite {
     assert(maxs.getAs[Double]("max_speed_1") == 4.0)    // dense channel unaffected
   }
 
+  test("a NaN sample is missing, as in pandas: interpolated over, never poisons the ride") {
+    // a 20 s ride, heartrate 100 + t with one JSON NaN token at t=2
+    val dir = java.nio.file.Files.createTempDirectory("graft-nan-ride")
+    val hr = (0 until 20).map(t => if (t == 2) "NaN" else s"${100 + t}.0")
+    java.nio.file.Files.write(dir.resolve("streams.jsonl"),
+      (s"""{"activity_id": 4, "time": [${(0 until 20).mkString(", ")}], """ +
+        s""""heartrate": [${hr.mkString(", ")}]}""").getBytes)
+    val acts = CleanActivities.clean(Seq(
+      """{"id": 4, "name": "NaN ride", "type": "Ride",
+         "start_date": "2024-01-05T06:30:00Z", "athlete": {"id": 7},
+         "total_elevation_gain": 0.0, "distance": 100.0, "moving_time": 20,
+         "elapsed_time": 20, "commute": false}""").toDF("json"), nowEpoch.toDouble)
+    val streams = graft.sources.StravaJsonSource.streams(spark, dir.resolve("streams.jsonl").toString)
+    val a = ActivityPipeline.process(acts, streams, nowEpoch).collect()(0)
+
+    val samples = a.getSeq[org.apache.spark.sql.Row](a.fieldIndex("streams"))
+    assert(samples(2).getAs[Long]("time_new") == 2L)
+    assert(samples(2).getAs[Double]("heartrate") == 102.0)
+    val maxs = a.getSeq[org.apache.spark.sql.Row](a.fieldIndex("maxs"))(0)
+    assert(Seq("max_hr_1", "max_hr_5", "max_hr_10").map(maxs.getAs[Double](_)) ==
+      Seq(119.0, 117.0, 114.5))
+  }
+
   test("5-year clamp rewrites ancient timestamps (P4)") {
     val old = CleanActivities.clean(Seq(
       """{"id": 3, "name": "Ancient", "type": "Ride",

@@ -58,6 +58,47 @@ class StravaEtlSpec extends AnyFunSuite {
     assert(spark.read.parquet(sink).filter(org.apache.spark.sql.functions.col("id") === 1).count() == 2) // appended again
   }
 
+  test("an unreadable sink fails the load instead of re-appending all history") {
+    val base = Files.createTempDirectory("graft-etl-corrupt")
+    val actsPath = base.resolve("activities.jsonl").toString
+    val streamsPath = base.resolve("streams.jsonl").toString
+    val sink = base.resolve("sink")
+    Files.write(base.resolve("activities.jsonl"),
+      activityJson(1, 7, "2024-01-01T00:00:00Z").getBytes)
+    Files.write(base.resolve("streams.jsonl"), streamJson(1).getBytes)
+    Files.createDirectories(sink.resolve("activity_date=2024-01-01"))
+    Files.write(sink.resolve("activity_date=2024-01-01/part-00000.parquet"),
+      "not a parquet file".getBytes)
+
+    intercept[Exception] {
+      StravaEtl.addHistoryData(spark, actsPath, streamsPath, sink.toString, nowEpoch)
+    }
+    // nothing was appended next to the unreadable file
+    assert(Files.list(sink.resolve("activity_date=2024-01-01")).count() == 1)
+  }
+
+  test("the sink a zero-row first load leaves reads as empty: watermark 0") {
+    val base = Files.createTempDirectory("graft-etl-empty")
+    val actsPath = base.resolve("activities.jsonl").toString
+    val streamsPath = base.resolve("streams.jsonl").toString
+    val sink = base.resolve("sink")
+    Files.write(base.resolve("activities.jsonl"), Array.emptyByteArray)
+    Files.write(base.resolve("streams.jsonl"), Array.emptyByteArray)
+    assert(StravaEtl.addHistoryData(spark, actsPath, streamsPath, sink.toString, nowEpoch)
+      .count() == 0)
+    // the load made the sink directory but wrote no data file into it
+    assert(Files.isDirectory(sink))
+    assert(Files.walk(sink).filter(p => Files.isRegularFile(p) &&
+      !p.getFileName.toString.matches("[_.].*")).count() == 0)
+    assert(ActivitySink.latestEpoch(spark, sink.toString, 7L) == 0L)
+
+    Files.write(base.resolve("activities.jsonl"),
+      activityJson(1, 7, "2024-01-01T00:00:00Z").getBytes)
+    Files.write(base.resolve("streams.jsonl"), streamJson(1).getBytes)
+    assert(StravaEtl.addHistoryData(spark, actsPath, streamsPath, sink.toString, nowEpoch)
+      .count() == 1)
+  }
+
   test("legacyCompat sync is still incremental: the username watermark survives user_id=null") {
     val base = Files.createTempDirectory("graft-etl-legacy")
     val actsPath = base.resolve("activities.jsonl").toString

@@ -88,7 +88,7 @@ class TriangularRollingSpec extends AnyFunSuite {
     val w = Window.partitionBy("k").orderBy("t")
     val slow = df.select(Seq(col("k"), col("t")) ++
       ns.map(n => TriangularRolling.triangMean(col("v"), w, n).as(s"slow_$n")): _*)
-    val fast = TriangularRolling.triangMeansKahan(df, Seq("k"), Seq("t"),
+    val fast = TriangularRolling.triangMeansFast(df, Seq("k"), Seq("t"),
       Seq("v"), ns)
     val joined = slow.join(fast, Seq("k", "t")).orderBy("k", "t").collect()
     joined.foreach { r =>
@@ -109,7 +109,7 @@ class TriangularRollingSpec extends AnyFunSuite {
 
   test("Kahan ring kernel: ulp-class on floats, pandas nulls, long partitions") {
     // float values: parity within ulps regardless of partition length
-    // (the prefix kernel's cancellation class is absent by design)
+    // (no partition-sized running sum to cancel, by design)
     val rng = new scala.util.Random(13)
     val vals: Seq[Option[Double]] = (0 until 1200).map { _ =>
       if (rng.nextDouble() < 0.05) None
@@ -121,7 +121,7 @@ class TriangularRollingSpec extends AnyFunSuite {
     val w = Window.partitionBy("k").orderBy("t")
     val slow = df.select(Seq(col("k"), col("t")) ++
       ns.map(n => TriangularRolling.triangMean(col("v"), w, n).as(s"slow_$n")): _*)
-    val fast = TriangularRolling.triangMeansKahan(df, Seq("k"), Seq("t"),
+    val fast = TriangularRolling.triangMeansFast(df, Seq("k"), Seq("t"),
       Seq("v"), ns)
     val joined = slow.join(fast, Seq("k", "t")).orderBy("t").collect()
     joined.foreach { r =>
@@ -139,16 +139,10 @@ class TriangularRollingSpec extends AnyFunSuite {
     }
   }
 
-  test("Kahan ring kernel: one window exchange/sort for all columns, no collect_list") {
-    val df = (0L until 50L).map(i => (i % 2, i, i.toDouble)).toDF("k", "t", "v")
-    val plan = TriangularRolling.triangMeansKahan(df, Seq("k"), Seq("t"),
-      Seq("v"), Seq(5, 10, 20)).queryExecution.executedPlan.toString
-    assert("Exchange hashpartitioning".r.findAllIn(plan).length === 1, plan)
-    assert("Sort \\[".r.findAllIn(plan).length === 1, plan)
-    assert(!plan.contains("collect_list"), plan)
-  }
-
   test("prefix-sum fast kernel agrees with the exact kernel (incl. nulls, multiple windows)") {
+    // triangMeansFast once differenced prefix sums; it now runs the ring
+    // kernel, and this keeps its parity on interleaved keys of two-decimal
+    // values over odd and even windows
     val rng = new scala.util.Random(42)
     val vals: Seq[Option[Double]] = (0 until 400).map { _ =>
       if (rng.nextDouble() < 0.07) None
@@ -174,6 +168,15 @@ class TriangularRollingSpec extends AnyFunSuite {
         }
       }
     }
+  }
+
+  test("Kahan ring kernel: one window exchange/sort for all columns, no collect_list") {
+    val df = (0L until 50L).map(i => (i % 2, i, i.toDouble)).toDF("k", "t", "v")
+    val plan = TriangularRolling.triangMeansFast(df, Seq("k"), Seq("t"),
+      Seq("v"), Seq(5, 10, 20)).queryExecution.executedPlan.toString
+    assert("Exchange hashpartitioning".r.findAllIn(plan).length === 1, plan)
+    assert("Sort \\[".r.findAllIn(plan).length === 1, plan)
+    assert(!plan.contains("collect_list"), plan)
   }
 }
 
